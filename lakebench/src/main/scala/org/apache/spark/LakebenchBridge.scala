@@ -1,0 +1,8 @@
+package org.apache.spark
+
+/** The one Spark-internal call the benchmark needs: listener events arrive
+  * asynchronously, so the traced run drains the bus before it reads the
+  * task metrics its listener collected. */
+object LakebenchBridge {
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
